@@ -1,8 +1,8 @@
 """Distributed condensed-graph fallbacks (VERDICT r2 next-round #3).
 
-Each driver-solve guard is lowered below the condensed-graph size so the
-operators take the distributed path (operators/condense.py), and the output
-is asserted IDENTICAL to the driver-solve path on the same input.
+Each driver-solve guard in operators/condense.py is lowered below the
+condensed-graph size so the operators take the distributed path, and the
+output is asserted IDENTICAL to the driver-solve path on the same input.
 """
 
 from __future__ import annotations
@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from whitebox_geospatial_analysis_tools_spark.operators import clump as clump_mod
+from whitebox_geospatial_analysis_tools_spark.operators import condense
 from whitebox_geospatial_analysis_tools_spark.operators import hydro
 from whitebox_geospatial_analysis_tools_spark.operators import raster as R
 
@@ -33,7 +34,7 @@ def _sorted(df):
 def _both(op, monkeypatch, guard_attr=("_MAX_DRIVER_ROWS",), guard_val=8):
     want = _sorted(op())
     for g in guard_attr:
-        monkeypatch.setattr(hydro, g, guard_val)
+        monkeypatch.setattr(condense, g, guard_val)
     got = _sorted(op())
     return want, got
 
@@ -66,6 +67,23 @@ def test_upslope_distributed(spark, ptr, monkeypatch):
     assert np.abs(want["up_len"].to_numpy() - got["up_len"].to_numpy()).max() <= 1e-6
 
 
+def test_chase_paths_dangling_target(spark, monkeypatch):
+    """A target missing from the forest ends the path at that cell, in
+    both tiers: (0,0) -> (0,1) -> (9,9) absent; (1,1) -> pit (5,5)."""
+    fwd = spark.createDataFrame(
+        [(0, 0, 0, 1, 1.0, -1, -1), (0, 1, 9, 9, 2.0, -1, -1),
+         (1, 0, -1, -1, 0.5, 5, 5), (1, 1, 1, 0, 0.25, -1, -1)],
+        "row long, col long, t_row long, t_col long, w double, "
+        "p_row long, p_col long",
+    )
+    want = [(0, 0, 3.0, 9, 9), (0, 1, 2.0, 9, 9),
+            (1, 0, 0.5, 5, 5), (1, 1, 0.75, 5, 5)]
+    for guard in (condense._MAX_DRIVER_ROWS, 0):
+        monkeypatch.setattr(condense, "_MAX_DRIVER_ROWS", guard)
+        got = sorted(tuple(r) for r in condense.chase_paths(fwd).collect())
+        assert got == want
+
+
 def test_stream_network_distributed(spark, ptr, monkeypatch):
     want, got = _both(
         lambda: hydro.stream_network(ptr, threshold=5, tile=16), monkeypatch,
@@ -93,7 +111,7 @@ def test_stream_network_tier2(spark, monkeypatch):
         # link tables under guard (len(want) links + dag rows <= 2G)
         g2 = len(want) + 2  # links alone < 2*g2; dag pairs ~ junction count
         assert 2 * g2 < n_stream, "fixture too small to separate the tiers"
-        monkeypatch.setattr(hydro, "_MAX_DRIVER_ROWS", g2)
+        monkeypatch.setattr(condense, "_MAX_DRIVER_ROWS", g2)
         got = _sorted(hydro.stream_network(ptr, _VT, tile=16))
         assert want.equals(got)
     finally:
@@ -108,8 +126,6 @@ def test_merge_labels_long_path(spark, monkeypatch):
     component min in O(log) rounds (VERDICT r3 next-round #1).
     Guard lowered to 0 so the DISTRIBUTED tier (not the driver
     union-find) is what converges here."""
-    from whitebox_geospatial_analysis_tools_spark.operators import condense
-
     monkeypatch.setattr(condense, "_MERGE_DRIVER_PAIRS", 0)
     n = 300
     pairs = spark.range(n - 1).selectExpr(
@@ -122,8 +138,6 @@ def test_merge_labels_long_path(spark, monkeypatch):
 def test_merge_labels_tiers_equal(spark, monkeypatch):
     """Driver union-find tier == distributed hook+shortcut tier on a pair
     set mixing stars, chains, and singleton pairs."""
-    from whitebox_geospatial_analysis_tools_spark.operators import condense
-
     pairs = spark.range(500).selectExpr(
         "id * 7919 % 211 AS plabel", "(id * 104729 + 3) % 211 AS nplabel")
     want = condense.merge_labels(pairs).toPandas().sort_values(
@@ -137,8 +151,6 @@ def test_merge_labels_tiers_equal(spark, monkeypatch):
 def test_merge_labels_raises_unconverged(spark, monkeypatch):
     """Hitting the round cap without fixpoint must be LOUD, never a silent
     wrong answer."""
-    from whitebox_geospatial_analysis_tools_spark.operators import condense
-
     pairs = spark.range(99).selectExpr("id AS plabel", "id + 1 AS nplabel")
     monkeypatch.setattr(condense, "_MERGE_DRIVER_PAIRS", 0)
     monkeypatch.setattr(condense, "_MAX_ROUNDS", 1)
@@ -178,7 +190,7 @@ def test_clump_distributed(spark, monkeypatch):
                 F.expr("CAST(FLOOR(value / 50e0) AS BIGINT)").alias("cls"))
     )
     want = _sorted(clump_mod.clump(cells, 128, tile=32))
-    monkeypatch.setattr(clump_mod, "_MAX_DRIVER_PAIRS", 1)
+    monkeypatch.setattr(condense, "_MERGE_DRIVER_PAIRS", 1)
     got = _sorted(clump_mod.clump(cells, 128, tile=32))
     assert len(want) == len(got) > 0
     assert want.equals(got)

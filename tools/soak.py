@@ -55,8 +55,7 @@ def main() -> None:
           f"docs = {args.docs / 1e6:.1f}M", flush=True)
 
     # force the distributed condensed-graph paths regardless of natural size
-    hydro._MAX_DRIVER_ROWS = 100_000
-    clump_mod._MAX_DRIVER_PAIRS = 100_000
+    condense._MAX_DRIVER_ROWS = 100_000
     condense._MERGE_DRIVER_PAIRS = 100_000
 
     dem = R.synth_raster(spark, args.rows, args.cols)

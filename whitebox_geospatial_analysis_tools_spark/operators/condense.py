@@ -1,36 +1,45 @@
-"""Distributed solvers for condensed boundary/link graphs.
+"""Tiered solvers for condensed boundary/link graphs.
 
 The hydro/clump operators condense their grid problems to boundary-sized
-graphs (entry cells, stream links, label equivalences) and solve those on
-the driver behind a size guard.  This module is the documented cluster-scale
-fallback: when the condensed graph exceeds the guard, the SAME solve runs
-distributed —
+graphs (entry cells, stream links, label equivalences) and hand them to a
+solver here.  The solver picks the tier: a graph within its guard
+(`_MAX_DRIVER_ROWS` rows, `_MERGE_DRIVER_PAIRS` pairs for merge_labels) is
+fetched in one job and solved on the driver; past the guard the SAME solve
+runs distributed.  Operators never branch on the tier, so lowering a guard
+forces the distributed tier everywhere (tests/test_condense.py,
+tools/soak.py); stream_network, fd8_accum and cost_pathway keep their own
+differently shaped tiers but read `_MAX_DRIVER_ROWS` at call time.
 
-  graph_masses     recursive super-tile condensation for the functional
-                   mass/max DAG of flow_accum / upslope_max_length: each
+  graph_masses     mass/max through-values of the functional DAG of
+                   flow_accum / upslope_max_length: driver Kahn under the
+                   guard; else recursive super-tile condensation — each
                    level groups nodes by a fanout-times-larger spatial cell,
                    solves the in-group subgraph with the same vectorized
                    Kahn kernel, and forwards cross-group carries to a graph
                    ~fanout-times smaller (entry nodes sit on group
-                   perimeters), recursing until the driver guard is met —
-                   O(log_fanout) levels, two passes per level.
-  chase_paths      weighted pointer jumping (path doubling) over a
-                   functional forest: per node, the terminal cell and the
-                   accumulated path weight — watershed labels and
-                   flowpath remainders in O(log path) rounds.
+                   perimeters) until the guard is met — O(log_fanout)
+                   levels, two passes per level.
+  chase_paths      per node of a functional forest, the terminal cell and
+                   the accumulated path weight (watershed labels, flowpath
+                   remainders): memoized driver chase under the guard; else
+                   weighted pointer jumping (path doubling), O(log path)
+                   rounds.
   solve_links      iterative frontier Kahn over the stream-link DAG
                    (Strahler / Shreve) + pred-chain pointer doubling for
                    the main stem — rounds bounded by junction depth /
                    log(chain length), each a join over the link-sized table.
-  merge_labels     min-label equivalence closure (hook + shortcut rounds, a
-                   Shiloach-Vishkin-style CC) over the clump boundary pairs.
+  merge_labels     min-label equivalence closure over label pairs (clump
+                   boundary merge, dedup clusters): driver union-find under
+                   the guard; else hook + shortcut rounds, a
+                   Shiloach-Vishkin-style CC.
 
 All inputs here are already condensed (O(N/tile) or link-sized), so every
-round touches a frame orders of magnitude smaller than the raster.
-Reference parity: these reproduce exactly what the driver solves do —
-FlowAccumD8.java:282-330 scheduling, Watershed.java terminal labels,
-StreamOrder.java:364 / StreamMagnitude.java / FindMainStem.java:347,
-Clump.java:131-206 merge semantics.
+round touches a frame orders of magnitude smaller than the raster.  A
+driver-tier result is guard-sized and carries a broadcast hint, so the
+operator's join back ships it rather than shuffling the raster.
+Reference parity: FlowAccumD8.java:282-330 scheduling, Watershed.java
+terminal labels, StreamOrder.java:364 / StreamMagnitude.java /
+FindMainStem.java:347, Clump.java:131-206 merge semantics.
 """
 
 from __future__ import annotations
@@ -42,11 +51,27 @@ from pyspark.sql import functions as F
 
 from . import _scratch
 
+_MAX_DRIVER_ROWS = 5_000_000  # condensed rows solved on the driver
+_MERGE_DRIVER_PAIRS = 2_000_000  # pair rows union-found on the driver
 _OUT_SCHEMA = (
     "row long, col long, t_row long, t_col long, val double, w double, kind int"
 )
 _MAX_LEVELS = 24
 _MAX_ROUNDS = 64
+_FANOUT = 8  # super-group growth per graph_masses level
+
+
+def _checkpoint(df: DataFrame, tag: str) -> DataFrame:
+    """Local checkpoint of one round's state, re-wrapped in a fresh
+    DataFrame.  A checkpoint keeps its plan's size estimate, and a join's
+    estimate is the product of its inputs', so in a loop that joins
+    checkpoint on checkpoint the estimate's bit length doubles every round:
+    past ~16 rounds the driver spends seconds to minutes per round in
+    BigInteger multiplication.  The re-wrapped rows carry no estimate."""
+    spark = df.sparkSession
+    cp = df.localCheckpoint()
+    fresh = spark._jsparkSession.createDataFrame(cp._jdf.rdd(), cp._jdf.schema())
+    return _scratch.track(spark, DataFrame(fresh, spark), tag)
 
 
 # ---------------------------------------------------------------------------
@@ -173,11 +198,10 @@ def _driver_masses(spark, pdf: pd.DataFrame, is_max: bool) -> DataFrame:
             if indeg[t] == 0:
                 stack.append(t)
     rows = [(r, c, m) for (r, c), m in mass.items()]
-    return spark.createDataFrame(rows, "row long, col long, mass double")
+    return F.broadcast(spark.createDataFrame(rows, "row long, col long, mass double"))
 
 
-def graph_masses(nodes: DataFrame, *, group_cell: int, driver_max: int,
-                 is_max: bool = False, fanout: int = 8,
+def graph_masses(nodes: DataFrame, *, group_cell: int, is_max: bool = False,
                  _level: int = 0) -> DataFrame:
     """Through-value per node of a functional spatial DAG.
 
@@ -193,8 +217,8 @@ def graph_masses(nodes: DataFrame, *, group_cell: int, driver_max: int,
     tag = f"condense{_level}"
     _scratch.release(spark, tag)
     nodes = _scratch.track(spark, nodes.persist(), tag)
-    head = nodes.limit(driver_max + 1).toPandas()
-    if len(head) <= driver_max:
+    head = nodes.limit(_MAX_DRIVER_ROWS + 1).toPandas()
+    if len(head) <= _MAX_DRIVER_ROWS:
         out = _driver_masses(spark, head, is_max)
         _scratch.release(spark, tag)
         return out
@@ -225,8 +249,7 @@ def graph_masses(nodes: DataFrame, *, group_cell: int, driver_max: int,
         F.coalesce("w", F.lit(0.0)).alias("w"),
     )
     mass2 = graph_masses(
-        nodes2, group_cell=g * fanout, driver_max=driver_max,
-        is_max=is_max, fanout=fanout, _level=_level + 1,
+        nodes2, group_cell=g * _FANOUT, is_max=is_max, _level=_level + 1
     )
     ext = mass2.select("row", "col", F.col("mass").alias("ext"))
     pass_b = grouped.join(ext, ["row", "col"], "left").groupBy(
@@ -240,15 +263,59 @@ def graph_masses(nodes: DataFrame, *, group_cell: int, driver_max: int,
 # ---------------------------------------------------------------------------
 # weighted pointer jumping over a functional forest (transit chase)
 # ---------------------------------------------------------------------------
+def _driver_chase(spark, pdf: pd.DataFrame) -> DataFrame:
+    """Base case: memoized chase over the (guard-sized) forest.  Totals fold
+    from the terminal back (w + total(next)), the order in which the
+    flowpath remainders accumulate."""
+    fwd: dict[tuple[int, int], tuple] = {}
+    for r, c, tr, tc, w, pr, pc in zip(
+        pdf["row"], pdf["col"], pdf["t_row"], pdf["t_col"], pdf["w"],
+        pdf["p_row"], pdf["p_col"],
+    ):
+        fwd[(int(r), int(c))] = (
+            (int(tr), int(tc)) if tr >= 0 else None, float(w),
+            (int(pr), int(pc)),
+        )
+    tot: dict[tuple[int, int], float] = {}
+    term: dict[tuple[int, int], tuple[int, int]] = {}
+    for e in fwd:
+        chain = []
+        cur = e
+        while cur in fwd and cur not in tot:
+            if len(chain) > len(fwd):
+                raise RuntimeError("chase_paths did not converge (cycle?)")
+            chain.append(cur)
+            cur = fwd[cur][0]
+            if cur is None:
+                break
+        for k in reversed(chain):
+            t, w, p = fwd[k]
+            if t is None:
+                tot[k], term[k] = w, p
+            elif t in tot:
+                tot[k], term[k] = w + tot[t], term[t]
+            else:  # missing pointer target: terminate at the dangling cell
+                tot[k], term[k] = w, t
+    rows = [(r, c, tot[(r, c)], *term[(r, c)]) for r, c in fwd]
+    return F.broadcast(spark.createDataFrame(
+        rows, "row long, col long, total double, term_row long, term_col long"
+    ))
+
+
 def chase_paths(fwd: DataFrame) -> DataFrame:
     """fwd: (row, col, t_row, t_col, w, p_row, p_col) — each node forwards
     to (t_row, t_col) with path weight w, or terminates (t_row = -1) at
-    terminal cell (p_row, p_col).
+    terminal cell (p_row, p_col).  A target absent from fwd ends the path
+    at that cell.
 
     Returns (row, col, total double, term_row, term_col): accumulated chain
-    weight to termination and the terminal cell — Wyllie path doubling,
-    O(log chain) rounds over the condensed frame."""
+    weight to termination and the terminal cell — driver chase under the
+    guard, else Wyllie path doubling, O(log chain) rounds over the
+    condensed frame."""
     spark = fwd.sparkSession
+    head = fwd.limit(_MAX_DRIVER_ROWS + 1).toPandas()
+    if len(head) <= _MAX_DRIVER_ROWS:
+        return _driver_chase(spark, head)
     _scratch.release(spark, "chase")
     state = fwd.select(
         "row", "col",
@@ -258,7 +325,7 @@ def chase_paths(fwd: DataFrame) -> DataFrame:
         F.when(F.col("t_row") < 0, F.col("p_col")).otherwise(F.lit(-1)).alias("xc"),
         (F.col("t_row") < 0).alias("done"),
     )
-    state = _scratch.track(spark, state.localCheckpoint(), "chase")
+    state = _checkpoint(state, "chase")
     for _ in range(_MAX_ROUNDS):
         if state.where(~F.col("done")).limit(1).count() == 0:
             break
@@ -283,18 +350,13 @@ def chase_paths(fwd: DataFrame) -> DataFrame:
             F.coalesce("_xc2", F.col("nc")).alias("xc"),
             F.coalesce("_done2", F.lit(True)).alias("done"),
         )
-        state = _scratch.track(
-            spark,
-            state.where(F.col("done")).unionByName(live).localCheckpoint(),
-            "chase",
-        )
+        state = _checkpoint(state.where(F.col("done")).unionByName(live), "chase")
     else:
         raise RuntimeError("chase_paths did not converge (cycle?)")
-    out = state.select(
+    return state.select(
         "row", "col", F.col("acc").alias("total"),
         F.col("xr").alias("term_row"), F.col("xc").alias("term_col"),
     )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -311,14 +373,14 @@ def solve_links(links: DataFrame, dag: DataFrame) -> DataFrame:
     rounds; main iff the root is an outlet)."""
     spark = links.sparkSession
     _scratch.release(spark, "links")
-    links = _scratch.track(spark, links.select("label").localCheckpoint(), "links")
-    dag = _scratch.track(spark, dag.localCheckpoint(), "links")
+    links = _checkpoint(links.select("label"), "links")
+    dag = _checkpoint(dag, "links")
     need = dag.groupBy("dn").agg(F.count(F.lit(1)).alias("_need"))
     total = links.count()
     solved = links.join(
         need, links["label"] == need["dn"], "left_anti"
     ).select("label", F.lit(1).alias("strahler"), F.lit(1).alias("magnitude"))
-    solved = _scratch.track(spark, solved.localCheckpoint(), "links")
+    solved = _checkpoint(solved, "links")
     n_solved = solved.count()
     for _ in range(_MAX_ROUNDS):
         if n_solved >= total:
@@ -344,9 +406,7 @@ def solve_links(links: DataFrame, dag: DataFrame) -> DataFrame:
             )
         )
         # only links not yet solved are new (got==need happens exactly once)
-        solved = _scratch.track(
-            spark, solved.unionByName(new).localCheckpoint(), "links"
-        )
+        solved = _checkpoint(solved.unionByName(new), "links")
         prev, n_solved = n_solved, solved.count()
         if n_solved == prev:
             raise RuntimeError("solve_links: no progress (cyclic link DAG?)")
@@ -369,7 +429,7 @@ def solve_links(links: DataFrame, dag: DataFrame) -> DataFrame:
         F.coalesce("p", F.col("label")).alias("cur"),
         F.col("p").isNull().alias("done"),
     )
-    state = _scratch.track(spark, state.localCheckpoint(), "links")
+    state = _checkpoint(state, "links")
     for _ in range(_MAX_ROUNDS):
         if state.where(~F.col("done")).limit(1).count() == 0:
             break
@@ -382,11 +442,7 @@ def solve_links(links: DataFrame, dag: DataFrame) -> DataFrame:
         ).select(
             "label", F.col("_cur2").alias("cur"), F.col("_done2").alias("done")
         )
-        state = _scratch.track(
-            spark,
-            state.where(F.col("done")).unionByName(live).localCheckpoint(),
-            "links",
-        )
+        state = _checkpoint(state.where(F.col("done")).unionByName(live), "links")
     else:
         raise RuntimeError("solve_links main-stem chase exceeded round cap")
     outlets = links.join(
@@ -402,9 +458,6 @@ def solve_links(links: DataFrame, dag: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # equivalence-pair min-label closure (clump boundary merge)
 # ---------------------------------------------------------------------------
-_MERGE_DRIVER_PAIRS = 2_000_000  # driver union-find guard (pair rows)
-
-
 def merge_labels(pairs: DataFrame) -> DataFrame:
     """pairs: (plabel, nplabel) undirected equivalences.  Returns (plabel,
     glabel) mapping every node appearing in a pair to the min label of its
@@ -441,17 +494,17 @@ def merge_labels(pairs: DataFrame) -> DataFrame:
                 par[rb] = ra  # min-value root => glabel = component min
         nodes = sorted(set(av) | set(bv))
         out = [(int(n), int(find(n))) for n in nodes]
-        return spark.createDataFrame(out or [], "plabel long, glabel long")
+        return F.broadcast(spark.createDataFrame(out, "plabel long, glabel long"))
     _scratch.release(spark, "merge_labels")
     edges = pairs.select(F.col("plabel").alias("a"), F.col("nplabel").alias("b"))
     edges = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct()
-    edges = _scratch.track(spark, edges.localCheckpoint(), "merge_labels")
+    edges = _checkpoint(edges, "merge_labels")
     parent = edges.groupBy("a").agg(
         F.least(F.min("b"), F.first("a")).alias("p")
     ).select(F.col("a").alias("n"), F.least("p", F.col("a")).alias("p"))
-    parent = _scratch.track(spark, parent.localCheckpoint(), "merge_labels")
+    parent = _checkpoint(parent, "merge_labels")
     for _ in range(_MAX_ROUNDS):
         # hook: p(v) <- min(p(v), min over neighbors' p)
         nb = (
@@ -466,7 +519,7 @@ def merge_labels(pairs: DataFrame) -> DataFrame:
         short = hooked.join(pp, hooked["p"] == pp["_pn"], "left").select(
             "n", F.least("p", F.coalesce("_pp", F.col("p"))).alias("p")
         )
-        short = _scratch.track(spark, short.localCheckpoint(), "merge_labels")
+        short = _checkpoint(short, "merge_labels")
         changed = (
             short.join(parent.select(F.col("n"), F.col("p").alias("_old")), "n")
             .where(F.col("p") != F.col("_old")).limit(1).count()
